@@ -17,7 +17,11 @@ final class MtimeCache[V] {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, V)]()
 
-  def apply(key: String, mtime: Long)(compute: => V): V =
+  /** `fresh` rejects an entry the mtime alone cannot (e.g. a model bound
+    * to another SparkSession); a rejected entry is replaced like a stale
+    * one. */
+  def apply(key: String, mtime: Long, fresh: V => Boolean = (_: V) => true)(
+      compute: => V): V =
     cache.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == mtime) cur else (mtime, compute))._2
+      if (cur != null && cur._1 == mtime && fresh(cur._2)) cur else (mtime, compute))._2
 }

@@ -272,11 +272,10 @@ object RunHarness {
     * per-list ⟨q,c_l⟩ bias (IvfPqRes doc). Recorded as `ivfpq_res` /
     * `ivfpq_res:<shortlist>` so results.jsonl separates the encodings. */
   private class IvfPqResBackend(val name: String, model: IvfPqResModel,
-                                sizes: Map[Int, Long], nprobeN: Int,
-                                shortlistN: Int, ram: Option[RamCorpus])
+                                nprobeN: Int, shortlistN: Int, ram: Option[RamCorpus])
       extends Backend {
     private def stats(ms: Double, lists: Seq[Int], kth: Option[Double]): Stats = {
-      val scanned = lists.map(sizes.getOrElse(_, 0L)).sum
+      val scanned = lists.map(model.listSizes.getOrElse(_, 0L)).sum
       Stats(ms, scanned, Some(lists.length), Some(nprobeN), kth, None,
         Some(s"ivfpq residual-encoded m=${model.m} k=${model.kCodes} shortlist=$shortlistN"))
     }
@@ -543,7 +542,7 @@ object RunHarness {
           .getOrElse(new PostFilterBackend(ladder, maxLadderSteps))
       case "post_filter:ivf" =>
         val model = corpusKey match {
-          case Some(key) => Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total))
+          case Some(key) => Ivf.open(emb, key, total)
           case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
         }
         new IvfPostFilterBackend(model, nprobe, ladder, maxLadderSteps)
@@ -553,7 +552,7 @@ object RunHarness {
       case p if p == "pq" || p.startsWith("pq:") =>
         val sl = if (p == "pq") 100 else p.stripPrefix("pq:").toInt
         val model = corpusKey match {
-          case Some(key) => Pq.cached(emb.sparkSession, emb, key)
+          case Some(key) => Pq.open(emb, key, total)
           case None => Pq.build(emb)
         }
         // codes are 1:1 with corpus rows, so the caller-known total IS the
@@ -563,7 +562,7 @@ object RunHarness {
       case p if p == "sq" || p.startsWith("sq:") =>
         val sl = if (p == "sq") 100 else p.stripPrefix("sq:").toInt
         val model = corpusKey match {
-          case Some(key) => Sq.cached(emb.sparkSession, emb, key)
+          case Some(key) => Sq.open(emb, key, total)
           case None => Sq.build(emb)
         }
         new SqBackend(p, model, shortlistN = sl, codeCount = total, ram = ram)
@@ -571,28 +570,20 @@ object RunHarness {
       case p if p == "bq" || p.startsWith("bq:") =>
         val sl = if (p == "bq") 100 else p.stripPrefix("bq:").toInt
         val model = corpusKey match {
-          case Some(key) => Bq.cached(emb.sparkSession, emb, key)
+          case Some(key) => Bq.open(emb, key, total)
           case None => Bq.build(emb)
         }
         new BqBackend(p, model, shortlistN = sl, codeCount = total, ram = ram)
       // residual-encoded composition, same dial grammar — matched BEFORE
       // the plain "ivfpq" prefix rule
       case p if p == "ivfpq_res" || p.startsWith("ivfpq_res:") =>
-        val spark = emb.sparkSession
-        val (model, sizes) = corpusKey match {
-          case Some(key) =>
-            val m = IvfPqRes.cached(emb, key,
-              Ivf.cached(spark, emb, key, knownTotal = Some(total)))
-            (m, IvfPqRes.listSizes(key, m))
-          case None =>
-            val m = IvfPqRes.build(
-              Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
-            // anonymous corpora get a per-model cache key: two un-keyed
-            // corpora with equal row counts must not share stale sizes
-            (m, IvfPqRes.listSizes(s"anon-${System.identityHashCode(m)}", m))
+        val model = corpusKey match {
+          case Some(key) => IvfPqRes.open(emb, key, total, Ivf.open(emb, key, total))
+          case None => IvfPqRes.build(
+            Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
         }
         val sl = if (p == "ivfpq_res") 100 else p.stripPrefix("ivfpq_res:").toInt
-        new IvfPqResBackend(p, model, sizes, nprobe, shortlistN = sl, ram = ram)
+        new IvfPqResBackend(p, model, nprobe, shortlistN = sl, ram = ram)
       case p if p == "ivfpq" || p.startsWith("ivfpq:") =>
         val model = ivfPqModelFor(emb, total, corpusKey)
         // bare "ivfpq" serves the index's auto-tuned default (meta.json);
@@ -602,7 +593,7 @@ object RunHarness {
         new IvfPqBackend(p, model, nprobe, shortlistN = sl, ram = ram)
       case "ivf" =>
         val model = corpusKey match {
-          case Some(k) => Ivf.cached(emb.sparkSession, emb, k, knownTotal = Some(total))
+          case Some(k) => Ivf.open(emb, k, total)
           case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
         }
         new IvfBackend(model, nprobe)
@@ -802,9 +793,8 @@ object RunHarness {
   private def ivfPqModelFor(emb: DataFrame, total: Long,
                             corpusKey: Option[String]): IvfPqModel =
     corpusKey match {
-      case Some(key) => IvfPq.cached(emb.sparkSession, emb, key,
-        Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total)),
-        Pq.cached(emb.sparkSession, emb, key))
+      case Some(key) => IvfPq.open(emb, key, total,
+        Ivf.open(emb, key, total), Pq.open(emb, key, total))
       case None => IvfPq.compose(
         Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))), Pq.build(emb))
     }

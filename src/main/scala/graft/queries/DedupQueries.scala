@@ -47,7 +47,7 @@ object DedupQueries {
   private val clusterCache = new graft.MtimeCache[DataFrame]
 
   // PERSISTED per (sf dir, source mtime) under the system temp dir — the
-  // corpusBands/Ivf.cached publish discipline (r14 verdict #2): the first
+  // LocalArtifacts.publish discipline (r14 verdict #2): the first
   // JVM to need the τ=0.95 pair graph mines and publishes it with one
   // rename; every later JVM — including a STANDALONE consumer like a
   // corpus_release scale probe — loads the parquet instead of re-mining
@@ -78,36 +78,25 @@ object DedupQueries {
 
   /** Build-once/publish-by-rename for a corpus-derived artifact, keyed by
     * (family+code version, sf dir, documents mtime): _SUCCESS marks a
-    * complete table; concurrent builders race benignly (both produce
-    * identical bytes; the losing rename verifies a complete table exists
-    * and discards its copy). The family prefix carries the mining
-    * parameters (the BandGeom discipline) and [[ArtifactVersion]] carries
-    * the code generation, so neither a parameter change nor a semantics
-    * change can ever load a stale table. Dead directories (older source
-    * mtime, crashed builders' tmp dirs, superseded version dirs) are
-    * reaped opportunistically so tmpdir doesn't accumulate one table per
+    * complete table; concurrent builders race benignly through
+    * LocalArtifacts.publish (both produce identical bytes; the losing
+    * rename discards its copy and verifies a complete table exists).
+    * The family prefix carries the mining parameters (the BandGeom
+    * discipline) and [[ArtifactVersion]] carries the code generation, so
+    * neither a parameter change nor a semantics change can ever load a
+    * stale table. Dead directories (older source mtime, crashed
+    * builders' tmp dirs, superseded version dirs) are reaped
+    * opportunistically so tmpdir doesn't accumulate one table per
     * regeneration — age-guarded; see [[reapStale]]. */
   private def publishedArtifact(s: SparkSession, d: String, family: String,
                                 build: () => DataFrame): DataFrame = {
     val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val docs = Tables.documents(s, d)
-    val mtime = docs.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
+    val mtime = graft.sources.LocalArtifacts.inputMtime(Tables.documents(s, d))
     val famDir = s"${sys.props("java.io.tmpdir")}/$family-$ArtifactVersion"
     val path = s"$famDir/$key-m$mtime"
     reapStale(famDir, key, mtime)
-    def done = new java.io.File(s"$path/_SUCCESS").exists()
-    if (!done) {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      build().write.mode("overwrite").parquet(tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        graft.sources.LocalArtifacts.deleteRecursively(new java.io.File(tmp))
-        if (!done) throw new IllegalStateException(
-          s"artifact publish failed: rename to $path lost without a complete table present")
-      }
-    }
+    graft.sources.LocalArtifacts.publish(path, graft.sources.LocalArtifacts.succeeded("."))(
+      build().write.mode("overwrite").parquet(_))
     // touch the live dir so the reaper's age guard approximates LAST
     // OPEN, not publish time, across JVMs. Scope honestly stated: the
     // touch fires once per open (and the in-JVM caches open once per
@@ -268,8 +257,8 @@ object DedupQueries {
   private def batchOf(docs: DataFrame) = docs.where(pmod(col("doc_id"), lit(10)) === 0)
 
   /** The corpus's banded-signature table, PERSISTED once per (sf dir,
-    * source mtime) under the system temp dir — the Ivf.cached discipline:
-    * the first JVM to need it mines and publishes with one rename; every
+    * source mtime) under the system temp dir (publishedArtifact): the
+    * first JVM to need it mines and publishes with one rename; every
     * later JVM (and every later "daily batch") loads the parquet instead
     * of re-hashing the corpus. At cluster scale this is a warehouse table
     * the ingest pipeline appends each batch's rows to. */
@@ -542,27 +531,19 @@ object DedupQueries {
     * through byte-identical. Equivalence with the frozen-model full run
     * and keep-slot revocation are spec-pinned (SemDedupSpec). Rows-only
     * (k-means geometry). */
-  /** Resident-state cache for dedup_semantic_inc (the vec_ivf_append
-    * discipline): the incremental entry times batch maintenance against a
-    * PRE-EXISTING corpus's frozen quantizer — the resident KMeans fit is
-    * artifact-load state, rebuilt only when the source regenerates. */
-  private val semanticIncModelCache = new graft.MtimeCache[graft.search.IvfModel]
-
   def dedupSemanticInc(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val batch = emb.where(pmod(col("vec_id"), lit(10)) === 0)
     val resident = emb.where(pmod(col("vec_id"), lit(10)) =!= 0)
-    val model = semanticIncModelCache(d, Tables.sourceMtime(d, "embeddings")) {
-      // persist the trained quantizer on disk too (Ivf.cached discipline):
-      // a new JVM against an unchanged corpus loads the fit instead of
-      // re-running KMeans — same params, deterministic seed, same model
-      val n = resident.count()
-      val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-      val mtime = Tables.sourceMtime(d, "embeddings")
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivf-semres/$key-n$n-m$mtime"
-      graft.search.Ivf.buildOrLoad(s, resident, path,
-        graft.dedup.SemDedup.pickK(n))
-    }
+    // the incremental entry times batch maintenance against a PRE-EXISTING
+    // corpus's frozen quantizer: the resident KMeans fit is artifact-load
+    // state, persisted and memoized through IndexStore (the Ivf.open
+    // layout) and rebuilt only when the source regenerates
+    val model = graft.search.IndexStore.open("ivf-semres", "", resident, d,
+        Tables.rowCount(s, d, "embeddings"), "data", "centroids")(
+      graft.search.Ivf.build(resident,
+        graft.dedup.SemDedup.pickK(resident.count())).write(_))(
+      graft.search.Ivf.load(s, _))
     val rv = graft.dedup.SemDedup.verdictFor(
       graft.dedup.SemDedup.assignWith(model, resident), CosineTau)
     graft.dedup.SemDedup.appendVerdict(model, resident, rv, batch, CosineTau)

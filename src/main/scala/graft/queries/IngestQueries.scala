@@ -58,20 +58,10 @@ object IngestQueries {
   private def npyArtifact(s: SparkSession, d: String): String = {
     val emb = Tables.embeddings(s, d)
     val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val mtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
+    val mtime = graft.sources.LocalArtifacts.inputMtime(emb)
     val path = s"${sys.props("java.io.tmpdir")}/graft-npy/$key-m$mtime/vectors.npy"
-    val f = new java.io.File(path)
-    if (!f.exists()) {
-      f.getParentFile.mkdirs()
-      // pid AND thread id (the corpusBands/buildOrLoad discipline): two
-      // threads of one JVM must never interleave writes into one tmp file
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      graft.sources.Ingest.writeVectorsNpy(emb, tmp)
-      if (!new java.io.File(tmp).renameTo(f) && !f.exists())
-        throw new IllegalStateException(s"npy artifact publish failed: $path")
-      new java.io.File(tmp).delete()
-    }
+    graft.sources.LocalArtifacts.publish(path, new java.io.File(_).isFile)(
+      graft.sources.Ingest.writeVectorsNpy(emb, _))
     path
   }
 

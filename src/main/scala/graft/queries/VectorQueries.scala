@@ -32,6 +32,10 @@ object VectorQueries {
 
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
+  /** Corpus row count for the IndexStore key — mtime-memoized, no job
+    * after the first call per source generation. */
+  private def rows(s: SparkSession, d: String): Long = Tables.rowCount(s, d, "embeddings")
+
   /** Staleness key for every dir-keyed model memo below (r17 verdict
     * #4's guard, shared via MtimeCache): all trained state in this file
     * derives from embeddings.parquet, so a regenerated source rebuilds
@@ -246,19 +250,16 @@ object VectorQueries {
 
   // ---- approximate (rows-only; recall contracts in VectorSearchSpec) ----
 
-  /** One IVF model per sf dir, PERSISTED: the first JVM to need it trains
-    * (seed 42, deterministic) and writes the list_id-partitioned index +
-    * centroids; every later use — including fresh Verify/Bench JVMs — loads
-    * and probes the partition-pruned on-disk index instead of re-running
-    * KMeans. The persisted path keys on (row count, source mtime) and the
-    * in-JVM memo is mtime-guarded, so regenerated testdata invalidates
-    * both layers. */
-  private val ivfCache = new graft.MtimeCache[IvfModel]
-
+  /** One IVF model per sf dir, PERSISTED through IndexStore: the first
+    * JVM to need it trains (seed 42, deterministic) and writes the
+    * list_id-partitioned index + centroids; every later use — including
+    * fresh Verify/Bench JVMs — loads and probes the partition-pruned
+    * on-disk index instead of re-running KMeans. Both the on-disk path and
+    * the in-JVM memo key on (row count, source mtime), so regenerated
+    * testdata invalidates both layers. maxIter 10: centroid quality
+    * converges well before that on corpora this size. */
   def ivfModel(s: SparkSession, d: String): IvfModel =
-    // maxIter 10: centroid quality converges well before that on corpora
-    // this size, and index build time is amortized across queries anyway
-    ivfCache(d, embMtime(d)) { Ivf.cached(s, emb(s, d), d, maxIter = 10) }
+    Ivf.open(emb(s, d), d, rows(s, d), maxIter = 10)
 
   /** Serving tier for the per-query harness paths: the reference's run.py
     * serves exact/pre/post from a RAM-resident matrix (loaders.py loads
@@ -344,15 +345,7 @@ object VectorQueries {
       Seq((rep.partitions.toLong, rep.filesBefore.toLong, rep.filesAfter.toLong,
         rowsBefore, rowsAfter, rowsBefore == rowsAfter && rep.filesAfter <= rep.partitions))
         .toDF("n_lists", "files_before", "files_after", "rows_before", "rows_after", "compacted_ok")
-    } finally deleteTmp(tmp)
-  }
-
-  private def deleteTmp(dir: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rec))
-      f.delete(); ()
-    }
-    rec(new java.io.File(dir))
+    } finally graft.sources.LocalArtifacts.deleteRecursively(new java.io.File(tmp))
   }
 
   /** #113 vec_ivfpq_append: the same daily-ingest split on the COMPOSED
@@ -412,7 +405,7 @@ object VectorQueries {
   def vecLshTopK(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val planes = CosineLsh.planes(QueryVectors.Dim,
-      CosineLsh.pickBits(Tables.rowCount(s, d, "embeddings")))
+      CosineLsh.pickBits(rows(s, d)))
     CosineLsh.search(e, q0, planes, K)
   }
 
@@ -470,7 +463,7 @@ object VectorQueries {
     * engine-native). */
   def vecLshSweep(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val bits = CosineLsh.pickBits(Tables.rowCount(s, d, "embeddings"))
+    val bits = CosineLsh.pickBits(rows(s, d))
     val tbls = CosineLsh.tables(QueryVectors.Dim, bits, nTables = 2)
     val exact = VectorSearch.topK(e, q0, K)
       .select(lit(0L).as("qid"), col("vec_id")).pin()
@@ -493,10 +486,8 @@ object VectorQueries {
   /** One PQ model per sf dir, persisted like the IVF index: the first JVM
     * trains the m per-subspace codebooks + encodes (seed 42), later JVMs
     * load the code table and score it without touching the vectors. */
-  private val pqCache = new graft.MtimeCache[graft.search.PqModel]
-
   def pqModel(s: SparkSession, d: String): graft.search.PqModel =
-    pqCache(d, embMtime(d)) { graft.search.Pq.cached(s, emb(s, d), d) }
+    graft.search.Pq.open(emb(s, d), d, rows(s, d))
 
   /** #88 PQ top-K: ADC shortlist over the m-byte code table + exact
     * refine of the shortlist (rows-only: codebook from sampled KMeans;
@@ -837,10 +828,8 @@ object VectorQueries {
   /** One SQ8 model per sf dir, persisted like the PQ index: the first JVM
     * trains the per-dim (vmin, delta) params + encodes (seed 42), later
     * JVMs load the byte-code table and score it without the vectors. */
-  private val sqCache = new graft.MtimeCache[graft.search.SqModel]
-
   def sqModel(s: SparkSession, d: String): graft.search.SqModel =
-    sqCache(d, embMtime(d)) { graft.search.Sq.cached(s, emb(s, d), d) }
+    graft.search.Sq.open(emb(s, d), d, rows(s, d))
 
   /** #117 SQ8 top-K: asymmetric scan of the 1-byte-per-dim code table +
     * exact refine of the shortlist (rows-only: params from a sampled
@@ -856,10 +845,8 @@ object VectorQueries {
   /** One BQ model per sf dir, persisted like the other tiers — though
     * "build" here is only a sign-bit encode pass (no training at all, the
     * tier's defining property). */
-  private val bqCache = new graft.MtimeCache[graft.search.BqModel]
-
   def bqModel(s: SparkSession, d: String): graft.search.BqModel =
-    bqCache(d, embMtime(d)) { graft.search.Bq.cached(s, emb(s, d), d) }
+    graft.search.Bq.open(emb(s, d), d, rows(s, d))
 
   /** #125 BQ top-K: Hamming shortlist over the sign-bit code table + exact
     * refine (rows-only; exactness-at-full-shortlist and recall-floor
@@ -973,7 +960,7 @@ object VectorQueries {
     * the persisted composed tier stays vec_ivfpq_topk's). Reuses the
     * persisted IVF half's assignment. */
   def ivfpqResModel(s: SparkSession, d: String): graft.search.IvfPqResModel =
-    graft.search.IvfPqRes.cached(emb(s, d), d, ivfModel(s, d))
+    graft.search.IvfPqRes.open(emb(s, d), d, rows(s, d), ivfModel(s, d))
 
   /** #137 vec_ivfpq_res_topk: the true FAISS IndexIVFPQ semantics —
     * residual-encoded codes, query-only LUT + per-list bias scoring
@@ -1052,11 +1039,8 @@ object VectorQueries {
     * PQ halves, persists the composed (vec_id, list_id, pq_codes) table
     * partitioned by list_id — so a probe is a partition-pruned scan of
     * m-byte codes (the FAISS IVFPQ scale tier). */
-  private val ivfpqCache = new graft.MtimeCache[graft.search.IvfPqModel]
-
   def ivfpqModel(s: SparkSession, d: String): graft.search.IvfPqModel =
-    ivfpqCache(d, embMtime(d)) {
-      graft.search.IvfPq.cached(s, emb(s, d), d, ivfModel(s, d), pqModel(s, d)) }
+    graft.search.IvfPq.open(emb(s, d), d, rows(s, d), ivfModel(s, d), pqModel(s, d))
 
   /** #94 IVFPQ top-K: probe nprobe lists, ADC-rank only THEIR codes,
     * exact-refine the shortlist (rows-only: both quantizers come from

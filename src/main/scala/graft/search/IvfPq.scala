@@ -232,15 +232,28 @@ object IvfPq {
       Pq.encodeCol(pq.codebook, pq.dsub).as("pq_codes")))
 
   /** Persist ONLY the composed code table — the halves persist themselves
-    * (Ivf.cached / Pq.cached); clustering by list before the partitioned
+    * through [[IndexStore]]; clustering by list before the partitioned
     * write keeps each list's codes in O(1) files (same discipline as
-    * IvfModel.write). */
-  def write(model: IvfPqModel, path: String): Unit =
+    * IvfModel.write) — plus meta.json with the build-time shortlist tune,
+    * measured on the written codes so it publishes atomically WITH them. */
+  def write(model: IvfPqModel, path: String): Unit = {
     model.coded.repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
+    val written = model.copy(coded = model.coded.sparkSession.read.parquet(s"$path/codes"))
+    writeMeta(path, written.tuneShortlist())
+  }
 
-  def load(spark: SparkSession, path: String, ivf: IvfModel, pq: PqModel): IvfPqModel =
-    IvfPqModel(ivf, pq, spark.read.parquet(s"$path/codes"), readMeta(path))
+  /** Load a persisted composed index with its recorded tune. A legacy dir
+    * without meta.json is tuned once and the result written alongside
+    * (deterministic — concurrent writers agree). */
+  def load(spark: SparkSession, path: String, ivf: IvfModel, pq: PqModel): IvfPqModel = {
+    val m = IvfPqModel(ivf, pq, spark.read.parquet(s"$path/codes"), readMeta(path))
+    if (m.tuned.isDefined) m
+    else {
+      writeMeta(path, m.tuneShortlist())
+      m.copy(tuned = readMeta(path))
+    }
+  }
 
   /** Persisted append on the composed tier (Ivf.appendToPath twin): the
     * batch's (vec_id, list_id, pq_codes) rows land as NEW files under
@@ -275,61 +288,14 @@ object IvfPq {
     }
   }
 
-  /** Load-or-publish with the shared single-rename race discipline
-    * (Ivf.buildOrLoad doc): a rename loser discards its copy and
-    * re-verifies the winner before loading. The shortlist tune runs on
-    * the tmp copy and publishes atomically WITH the codes; a legacy dir
-    * without meta.json is tuned once on load and the result written
-    * alongside (deterministic — concurrent writers agree). */
-  def buildOrLoad(spark: SparkSession, ivf: IvfModel, pq: PqModel,
-                  path: String): IvfPqModel = {
-    def done = new java.io.File(s"$path/codes/_SUCCESS").exists()
-    if (!done) {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(compose(ivf, pq), tmp)
-      writeMeta(tmp, load(spark, tmp, ivf, pq).tuneShortlist())
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!done)
-          throw new IllegalStateException(
-            s"ivfpq publish failed: rename to $path lost without a complete index present")
-      }
-    }
-    val m = load(spark, path, ivf, pq)
-    if (m.tuned.isDefined) m
-    else { // pre-meta cache dir: tune once, record, reload
-      writeMeta(path, m.tuneShortlist())
-      load(spark, path, ivf, pq)
-    }
-  }
-
-  /** Mtime-keyed per-corpus cache (Ivf.cached convention): the composed
-    * code table is persisted once per (corpus, params) and probed from
-    * its list_id-partitioned on-disk layout by every later JVM. */
-  // process-resident loaded models (Ivf.cached memo doc)
-  private val memo = new graft.MtimeCache[IvfPqModel]
-
-  def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,
-             ivf: IvfModel, pq: PqModel): IvfPqModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = emb.count()
-      // nl (the IVF geometry) must key the cache too: the composed table's
-      // list_ids are ivf-model-specific, and reusing codes persisted against
-      // a differently-built IVF would probe wrong lists with no error
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq/$key-n$n-m$srcMtime-nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}"
-      buildOrLoad(spark, ivf, pq, path)
-    }
-    if (srcMtime == 0L) body
-    else memo(s"$key-nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}", srcMtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+  /** The shared persisted composed index of a corpus ([[IndexStore]]),
+    * opened by vec_ivfpq_topk and the harness "ivfpq" backends alike. The
+    * IVF geometry keys the store too: the composed table's list_ids are
+    * ivf-model-specific, and codes persisted against a differently-built
+    * IVF would probe wrong lists with no error. */
+  def open(emb: DataFrame, corpusKey: String, rows: Long,
+           ivf: IvfModel, pq: PqModel): IvfPqModel =
+    IndexStore.open("ivfpq", s"-nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}",
+      emb, corpusKey, rows, "codes")(write(compose(ivf, pq), _))(
+      load(emb.sparkSession, _, ivf, pq))
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * output file per partition dir), published by atomic rename with the
   * old directory kept until the new one is complete — readers of the old
   * path are never exposed to a half-written table, the same discipline
-  * as the index buildOrLoad publish. Content is untouched (same rows,
+  * as LocalArtifacts.publish. Content is untouched (same rows,
   * same schema, same partition pruning); only the file layout changes —
   * reload-equivalence is spec-pinned (CompactionSpec).
   *

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.Dedup
+import graft.operators.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -18,7 +19,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * append-mode stream joins can't express), and the band table must GROW
   * as batches arrive — both are exactly what foreachBatch's batch-DF view
   * provides. In production the accumulated state is a warehouse table the
-  * job appends to; here it is localCheckpointed per batch to cut lineage.
+  * job appends to; here it is pinned (operators.Pin) per batch to cut lineage.
   *
   * Sequential appends COMPOSE (StreamingSpec): after batches B1..Bn the
   * union of emitted pair sets equals
@@ -30,18 +31,18 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 final class IncrementalDedup(corpus: DataFrame, tau: Double = 0.95) {
 
   @volatile private var allDocs =
-    corpus.select("doc_id", "text").localCheckpoint()
+    corpus.select("doc_id", "text").pin()
   @volatile private var bands =
-    Dedup.minhashBands(allDocs).localCheckpoint()
+    Dedup.minhashBands(allDocs).pin()
 
   /** Mine one batch against the accumulated state, then absorb it.
     * Returns the batch's near-dup pairs (batch×seen and batch×batch). */
   def processBatch(batch: DataFrame): DataFrame = synchronized {
     val b = batch.select("doc_id", "text")
     val pairs = Dedup.minhashIncrementalPairs(
-      allDocs.unionByName(b), bands, b, tau).localCheckpoint()
-    allDocs = allDocs.unionByName(b).localCheckpoint()
-    bands = bands.unionByName(Dedup.minhashBands(b)).localCheckpoint()
+      allDocs.unionByName(b), bands, b, tau).pin()
+    allDocs = allDocs.unionByName(b).pin()
+    bands = bands.unionByName(Dedup.minhashBands(b)).pin()
     pairs
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Pin.PinOps
 import graft.queries.PipelineQueries
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 final class IncrementalDsir(initial: DataFrame) {
 
   @volatile private var histCur: DataFrame =
-    initial.localCheckpoint()
+    initial.pin()
 
   /** The current (b, cq, cp) model state. */
   def histogram: DataFrame = histCur
@@ -34,13 +35,13 @@ final class IncrementalDsir(initial: DataFrame) {
   /** Absorb one micro-batch of documents; returns the batch scored
     * under the post-absorb model. */
   def processBatch(batch: DataFrame): DataFrame = synchronized {
-    val feats = PipelineQueries.dsirFeatures(batch).localCheckpoint()
+    val feats = PipelineQueries.dsirFeatures(batch).pin()
     val bh = PipelineQueries.dsirHistogram(feats)
     histCur = histCur.as("o").join(bh.as("n"), Seq("b"), "full_outer")
       .select(col("b"),
         (coalesce(col("o.cq"), lit(0L)) + coalesce(col("n.cq"), lit(0L))).as("cq"),
         (coalesce(col("o.cp"), lit(0L)) + coalesce(col("n.cp"), lit(0L))).as("cp"))
-      .localCheckpoint()
+      .pin()
     PipelineQueries.dsirScore(feats, PipelineQueries.dsirRatio(histCur))
   }
 

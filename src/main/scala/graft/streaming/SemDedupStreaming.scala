@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.SemDedup
+import graft.operators.Pin.PinOps
 import graft.search.IvfModel
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -24,16 +25,16 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 final class IncrementalSemDedup(model: IvfModel, resident: DataFrame, tau: Double) {
 
   @volatile private var assignedAll: DataFrame =
-    SemDedup.assignWith(model, resident).localCheckpoint()
+    SemDedup.assignWith(model, resident).pin()
   @volatile private var verdictCur: DataFrame =
-    SemDedup.verdictFor(assignedAll, tau).localCheckpoint()
+    SemDedup.verdictFor(assignedAll, tau).pin()
 
   /** The current keep-list snapshot (resident ∪ every batch so far). */
   def verdict: DataFrame = verdictCur
 
   /** Absorb one micro-batch; returns the new keep-list snapshot. */
   def processBatch(batch: DataFrame): DataFrame = synchronized {
-    val aBat = SemDedup.assignWith(model, batch).localCheckpoint()
+    val aBat = SemDedup.assignWith(model, batch).pin()
     val affected = aBat.select("list_id").distinct()
     val recomputed = SemDedup.verdictFor(
       assignedAll.join(broadcast(affected), Seq("list_id"), "left_semi")
@@ -42,8 +43,8 @@ final class IncrementalSemDedup(model: IvfModel, resident: DataFrame, tau: Doubl
       .join(broadcast(affected), Seq("list_id"), "left_anti")
       .unionByName(recomputed)
       .select("vec_id", "list_id", "centroid_cos", "sem_group", "kept")
-      .localCheckpoint()
-    assignedAll = assignedAll.unionByName(aBat).localCheckpoint()
+      .pin()
+    assignedAll = assignedAll.unionByName(aBat).pin()
     verdictCur
   }
 

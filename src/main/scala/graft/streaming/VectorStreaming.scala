@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Pin.PinOps
 import graft.search.{IvfModel, VecMath}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -62,7 +63,7 @@ object VectorStreaming {
   * the index must GROW across batches — accumulated state append-mode
   * joins can't hold; in production the accumulated assignment is the
   * list_id-partitioned warehouse table the job appends to, here it is
-  * localCheckpointed per batch to cut lineage. The sink receives the
+  * pinned (operators.Pin) per batch to cut lineage. The sink receives the
   * post-append model, so a serving layer can swap index snapshots
   * atomically per micro-batch. StreamingSpec pins: streamed appends
   * compose to the batch append (same model state), and full-probe
@@ -70,7 +71,7 @@ object VectorStreaming {
 final class IncrementalIvf(resident: IvfModel) {
 
   @volatile private var current =
-    resident.copy(indexed = resident.indexed.localCheckpoint())
+    resident.copy(indexed = resident.indexed.pin())
 
   /** The serving snapshot: resident ∪ every batch absorbed so far. */
   def model: IvfModel = current
@@ -78,7 +79,7 @@ final class IncrementalIvf(resident: IvfModel) {
   /** Assign + union one batch; returns the new serving snapshot. */
   def processBatch(batch: DataFrame): IvfModel = synchronized {
     current = current.copy(indexed = current.indexed
-      .unionByName(current.assign(batch)).localCheckpoint())
+      .unionByName(current.assign(batch)).pin())
     current
   }
 

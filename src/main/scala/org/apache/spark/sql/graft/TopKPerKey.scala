@@ -64,6 +64,9 @@ case class TopKPerKeyExec(
       if (partial)
         conf.getConfString(TopKPerKeyExec.FlushRowsConf, "1048576").toLong
       else Long.MaxValue
+    // a budget of 0 would never admit a row, so fill() would spin forever
+    require(flushRows > 0,
+      s"${TopKPerKeyExec.FlushRowsConf} must be positive, got $flushRows")
     child.execute().mapPartitionsInternal { it =>
       val keyProj = UnsafeProjection.create(keysLocal, schema)
       // "largest" under this ordering = the WORST kept row → heap head

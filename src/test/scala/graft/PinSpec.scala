@@ -91,4 +91,27 @@ class PinSpec extends AnyFunSuite {
       assert(e.getMessage.contains("bogus"))
     } finally spark.conf.set("spark.graft.pin", "local")
   }
+
+  test("reliable mode reaches the streaming twins: same rows, checkpoint files written") {
+    val docs = Tables.documents(spark, sf)
+    // IncrementalDsir pins its model state and each batch's features
+    def scored() = graft.streaming.IncrementalDsir.empty(spark)
+      .processBatch(docs).orderBy("doc_id").collect().toSeq
+    val local = scored()
+    val dir = java.nio.file.Files.createTempDirectory("graft-pin-stream").toString
+    val hadDir = spark.sparkContext.getCheckpointDir
+    spark.conf.set("spark.graft.pin", "reliable")
+    try {
+      spark.sparkContext.setCheckpointDir(dir)
+      assert(scored() == local)
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isFile) Seq(f)
+        else Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      assert(files(new java.io.File(dir)).nonEmpty,
+        "reliable pin in the streaming twin left nothing under the checkpoint dir")
+    } finally {
+      spark.conf.set("spark.graft.pin", "local")
+      hadDir.foreach(spark.sparkContext.setCheckpointDir)
+    }
+  }
 }

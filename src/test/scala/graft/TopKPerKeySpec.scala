@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.graft.TopKPerKey
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Signaler
+import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Custom TopKPerKey operator: logical plan + strategy + physical bounded
   * per-key heaps (injected via GraftExtensions). Must agree with the
@@ -91,6 +94,30 @@ class TopKPerKeySpec extends AnyFunSuite {
         case None => spark.conf.unset(
           org.apache.spark.sql.graft.TopKPerKeyExec.FlushRowsConf)
       }
+    }
+  }
+
+  test("a non-positive partial flush budget fails on the driver, never spins") {
+    val conf = org.apache.spark.sql.graft.TopKPerKeyExec.FlushRowsConf
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, "0")
+    // on timeout, cancel the (spinning) job and interrupt the test thread
+    implicit val signaler: Signaler = (t: Thread) => {
+      spark.sparkContext.cancelAllJobs(); t.interrupt()
+    }
+    try {
+      failAfter(Span(60, Seconds)) {
+        val e = intercept[Exception] {
+          TopKPerKey(scored, Seq(col("qid")), Seq(desc("score"), col("vec_id")), 5).collect()
+        }
+        // planning may wrap the driver-side failure; the cause is the contract
+        val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case iae: IllegalArgumentException => iae }
+        assert(cause.exists(_.getMessage.contains(conf)), e)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
     }
   }
 }

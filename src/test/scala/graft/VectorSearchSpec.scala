@@ -633,18 +633,21 @@ class VectorSearchSpec extends AnyFunSuite {
       assert(got.count(exactTop) / 10.0 >= 0.7,
         s"$name: auto-shortlist recall ${got.count(exactTop) / 10.0} at width $width")
     }
-    // persistence: buildOrLoad writes meta.json with the tune; a reload
-    // carries it; a legacy dir (meta deleted) re-tunes deterministically
+    // persistence: the published index carries meta.json with the tune;
+    // a reload carries it; a legacy dir (meta deleted) re-tunes
+    // deterministically
     val corpus = iid.toDF("vec_id", "embedding")
     val ivf = Ivf.build(corpus, nlist = 8)
     val pqm = Pq.build(corpus)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-tune").toString + "/idx"
-    val built = IvfPq.buildOrLoad(spark, ivf, pqm, dir)
+    def open() = graft.search.IndexStore.openAt(dir, "codes")(
+      IvfPq.write(IvfPq.compose(ivf, pqm), _))(IvfPq.load(spark, _, ivf, pqm))
+    val built = open()
     assert(built.tuned.isDefined, "build must record the tune in meta.json")
-    val reloaded = IvfPq.buildOrLoad(spark, ivf, pqm, dir)
+    val reloaded = open()
     assert(reloaded.tuned == built.tuned)
     new java.io.File(s"$dir/meta.json").delete()
-    val legacy = IvfPq.buildOrLoad(spark, ivf, pqm, dir)
+    val legacy = open()
     assert(legacy.tuned == built.tuned, "legacy dir re-tunes to the same result")
   }
 
